@@ -34,8 +34,19 @@ nowhere in the oracle, so the operator asserts instead of guessing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _pin_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """Pin ``df`` with an eager ``localCheckpoint`` and return it with
+    its row count. The count is an observed metric of the checkpoint
+    job itself, so pin and size probe share one job; a ``count()``
+    after the checkpoint would add two more under AQE (its aggregate's
+    map stage and the final stage run as separate jobs)."""
+    obs = Observation()
+    pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return pinned, obs.get["n"]
 
 
 def _materialize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -81,10 +92,8 @@ def pagerank(
     # inside the broadcast rank vector, so the (huge) edge relation is
     # consumed as-is — no join materialization, no shuffle of edges
     edges = _materialize_edges(edges)
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-        .localCheckpoint(eager=True)
+    deg, n = _pin_count(
+        edges.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
     )
     nodes = deg.select(F.col("src").alias("node"))  # out-degree ≥ 1 ⇒ nodes ≡ deg keys
     if not assume_no_dangling:
@@ -102,7 +111,6 @@ def pagerank(
                 "symmetrize_edges() or add self-loops first"
             )
 
-    n = deg.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     base = (1.0 - damping) / n
@@ -181,21 +189,22 @@ def k_hop_distances(
     node_col: str = "node",
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
     max_broadcast_frontier: int = 1_000_000,
 ) -> DataFrame:
     """Min-hop BFS distance from any source node, bounded at ``k`` hops.
 
     Relational Pregel shape: per hop, join the previous frontier with
-    the edge list and min-fold into the running distance table — the
-    same synchronous-superstep pattern as :func:`pagerank`, with
-    ``localCheckpoint`` per superstep (``checkpoint_every``) cutting
-    the lineage. Both ``dist`` and ``frontier`` are consumed TWICE by
-    the next superstep (frontier by the edge join and the union; dist
-    by the anti join and the union), so without materialization each
-    hop re-executes the whole prefix — plan size and work grow
-    exponentially in k (measured: k=3 on the sf0.1 co-event graph went
-    23.8 s → ~4 s when the checkpoint interval dropped from 4 to 1).
+    the edge list and append the newly reached nodes to the running
+    distance table — the same synchronous-superstep pattern as
+    :func:`pagerank`. Each hop's frontier is pinned (eager
+    ``localCheckpoint``) in ONE job that also counts it, through an
+    observed metric (:func:`_pin_count`): the frontier is consumed twice
+    (by the next hop's edge join and by the distance union), and
+    unpinned each hop would re-execute the whole prefix — plan size and
+    work grow exponentially in k. ``dist`` is then a union of pinned
+    frontiers, so it needs no pin of its own; the last hop's frontier
+    has one consumer (the returned union) and is neither pinned nor
+    counted. A run pins k relations: the sources and hops 1..k-1.
 
     → (node, dist) for every node within k hops of a source
     (sources themselves at dist 0). Unreached nodes are absent —
@@ -207,29 +216,24 @@ def k_hop_distances(
     broadcast into the edge join — the (huge) edge relation is then
     never shuffled, mirroring pagerank's broadcast rank vector; a
     frontier that outgrows the cap falls back to a shuffle join for
-    that superstep. The frontier is checkpointed before the size
-    probe, so the ``count()`` is a metadata read, not a recompute.
+    that superstep. ``dist`` broadcasts into the anti join under the
+    same cap; its size is tracked arithmetically (each frontier is
+    disjoint from ``dist``, so |dist| grows by exactly |frontier|).
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    if k > 0:
-        # The edge relation is consumed once per superstep; when it is
-        # itself a derived plan (joins/dedup — the usual case), every
-        # hop would re-execute that pipeline. Materialize it ONCE —
-        # same fix as pagerank's edge⋈degree checkpoint (measured on
-        # the sf0.1 co-purchase graph: 22 s → 4 s for k=3).
-        edges = _materialize_edges(edges, src, dst)
     dist = sources.select(F.col(node_col).alias("node")).distinct().withColumn(
         "dist", F.lit(0).cast("long")
     )
-    if k > 0:
-        dist = dist.localCheckpoint(eager=True)
-    frontier = dist
-    # frontier and dist sizes are tracked ARITHMETICALLY (frontier is
-    # disjoint from dist by the anti join, so |dist| grows by exactly
-    # |frontier|): one count per hop on the just-checkpointed frontier
-    # replaces the round-8 pair of count jobs per hop
-    n_frontier = n_dist = frontier.count() if k > 0 else 0
+    if k == 0:
+        return dist
+    # The edge relation is consumed once per superstep; when it is
+    # itself a derived plan (joins/dedup — the usual case), every hop
+    # would re-execute that pipeline. Materialize it ONCE (measured on
+    # the sf0.1 co-purchase graph: 22 s → 4 s for k=3).
+    edges = _materialize_edges(edges, src, dst)
+    frontier, n_frontier = _pin_count(dist)
+    dist, n_dist = frontier, n_frontier
     for hop in range(1, k + 1):
         fr = frontier
         if n_frontier <= max_broadcast_frontier:
@@ -243,17 +247,14 @@ def k_hop_distances(
         # new frontier = nodes not already reached at a smaller distance
         d = F.broadcast(dist) if n_dist <= max_broadcast_frontier else dist
         frontier = reached.join(d, "node", "left_anti")
-        if hop % checkpoint_every == 0:
-            frontier = frontier.localCheckpoint(eager=True)
-        n_frontier = frontier.count()
-        n_dist += n_frontier
+        if hop < k:
+            frontier, n_frontier = _pin_count(frontier)
+            n_dist += n_frontier
         # frontier is DISJOINT from dist (the anti join) and carries a
-        # strictly larger hop value, so the old groupBy-min combine was
-        # a no-op shuffle of the whole dist relation — a plain union is
-        # the identical result with zero exchanges (§2.4)
+        # strictly larger hop value, so a min-combine would be a no-op
+        # shuffle of the whole dist relation — a plain union is the
+        # identical result with zero exchanges
         dist = dist.unionByName(frontier)
-        if hop % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
     return dist
 
 
@@ -278,38 +279,38 @@ def bounded_shortest_paths(
     observation — after k rounds this equals full k-round relaxation,
     because an unchanged node re-relaxes to the same candidates), the
     frontier broadcasts while small, the edge relation is checkpointed
-    once, and dist/frontier checkpoint per round.
+    once, and each round pins its frontier (counted in the same job,
+    :func:`_pin_count`) and, except the last, its distance table.
 
     → (node, dist) for nodes reachable within k edges; sources at 0.
     """
+    from pyspark.storagelevel import StorageLevel
+
     if k < 0:
         raise ValueError("k must be >= 0")
-    if k > 0:
-        from pyspark.storagelevel import StorageLevel
-
-        proj = edges.select(
-            F.col(src), F.col(dst), F.col(weight).cast("long").alias("__w")
-        )
-        # cached inputs skip the duplicate materialization (see
-        # _materialize_edges); the weight cast is per-superstep codegen
-        edges = (
-            proj
-            if edges.storageLevel != StorageLevel.NONE
-            else proj.localCheckpoint(eager=True)
-        )
     dist = (
         sources.select(F.col(node_col).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
     )
-    if k > 0:
-        dist = dist.localCheckpoint(eager=True)
-    frontier = dist
-    # sizes tracked with ONE count per round (on the just-checkpointed
-    # frontier; |dist| ≤ |dist| + |frontier| — only the ≤-threshold
-    # decision needs it), replacing the round-8 two-count pair
-    n_frontier = n_dist = frontier.count() if k > 0 else 0
-    for _ in range(k):
+    if k == 0:
+        return dist
+    proj = edges.select(
+        F.col(src), F.col(dst), F.col(weight).cast("long").alias("__w")
+    )
+    # cached inputs skip the duplicate materialization (see
+    # _materialize_edges); the weight cast is per-superstep codegen
+    edges = (
+        proj
+        if edges.storageLevel != StorageLevel.NONE
+        else proj.localCheckpoint(eager=True)
+    )
+    # sizes come from ONE pin-and-count job per round (on the frontier;
+    # |dist| ≤ |dist| + |frontier| — only the ≤-threshold decision
+    # needs it)
+    frontier, n_frontier = _pin_count(dist)
+    dist, n_dist = frontier, n_frontier
+    for rnd in range(1, k + 1):
         fr = frontier
         if n_frontier <= max_broadcast_frontier:
             fr = F.broadcast(fr)
@@ -323,13 +324,11 @@ def bounded_shortest_paths(
         )
         d = F.broadcast(dist) if n_dist <= max_broadcast_frontier else dist
         # improved = candidate strictly better than current (or new node)
-        frontier = (
+        frontier, n_frontier = _pin_count(
             cand.join(d.withColumnRenamed("dist", "__old"), on="node", how="left")
             .filter(F.col("__old").isNull() | (F.col("dist") < F.col("__old")))
             .select("node", "dist")
-            .localCheckpoint(eager=True)
         )
-        n_frontier = frontier.count()
         n_dist += n_frontier  # upper bound: improved-only rows re-enter
         # every frontier node carries a STRICTLY better distance than
         # dist (the filter above), so the min-combine reduces to "take
@@ -343,7 +342,11 @@ def bounded_shortest_paths(
             on="node",
             how="left_anti",
         )
-        dist = keep.unionByName(frontier).localCheckpoint(eager=True)
+        dist = keep.unionByName(frontier)
+        # dist is read twice by the next round (candidate filter and
+        # anti join); the last round's has one consumer, the caller
+        if rnd < k:
+            dist = dist.localCheckpoint(eager=True)
     return dist
 
 
@@ -446,17 +449,20 @@ def min_label_propagation(
     checkpointed every ``checkpoint_every`` rounds to truncate
     lineage. → (node, lab) after ``rounds``."""
     edges = _materialize_edges(edges)
-    lab = (
-        edges.select(F.col("src").alias("node"))
-        .dropDuplicates()
-        .withColumn("lab", F.col("node"))
+    # the label table starts with the src nodes and gains every dst
+    # node in round 1, so |src ∪ dst| (round-invariant from there on)
+    # decides the broadcast strategy for every round. One pin-and-count
+    # job over the distinct node set sizes it; the src-initialised
+    # label table is a filter of the pinned set (and the pin keeps the
+    # twice-consumed round-1 label table from re-running the dedup)
+    nodes, n_nodes = _pin_count(
+        edges.select(F.col("src").alias("node"), F.lit(True).alias("is_src"))
+        .unionByName(edges.select(F.col("dst").alias("node"), F.lit(False).alias("is_src")))
+        .groupBy("node")
+        .agg(F.max("is_src").alias("is_src"))
     )
-    if rounds > 0:
-        # |V| is round-invariant: one pinned init + one count decides
-        # the broadcast strategy for every round (and the pin keeps the
-        # twice-consumed round-1 label table from re-running the dedup)
-        lab = lab.localCheckpoint(eager=True)
-        broadcast_labels = lab.count() <= max_broadcast_nodes
+    broadcast_labels = n_nodes <= max_broadcast_nodes
+    lab = nodes.filter("is_src").select("node", F.col("node").alias("lab"))
     for it in range(rounds):
         lsrc = lab.withColumnRenamed("node", "src")
         if broadcast_labels:
@@ -493,13 +499,15 @@ def katz_walk_counts(
     → (node, w1, w2, w3, katz_x64). int64 holds to ~1e5 average degree
     (w3 <= E * dmax^2); beyond that widen to decimal(38,0)."""
     edges = _materialize_edges(edges)
-    w1 = edges.groupBy(F.col("dst").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("w1")
+    # one pin-and-count job decides the broadcast strategy for both
+    # walk joins and pins w1, which is consumed three times (w2 join +
+    # final joins)
+    w1, n_w1 = _pin_count(
+        edges.groupBy(F.col("dst").alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("w1")
+        )
     )
-    # one count decides the broadcast strategy for both walk joins and
-    # pins w1, which is consumed three times (w2 join + final joins)
-    w1 = w1.localCheckpoint(eager=True)
-    bcast = w1.count() <= max_broadcast_nodes
+    bcast = n_w1 <= max_broadcast_nodes
     b = F.broadcast if bcast else (lambda d: d)
     w2 = (
         edges.join(b(w1.withColumnRenamed("node", "src")), on="src")

@@ -575,15 +575,15 @@ def _spearman_by_group(spark, sf_dir):
     wq = Window.partitionBy("l_returnflag").orderBy(F.col("l_quantity").asc())
     wp = Window.partitionBy("l_returnflag").orderBy(F.col("l_extendedprice").asc())
     x = (
-        2 * F.rank().over(wq)
+        2 * F.rank().over(wq).cast("long")
         + F.count(F.lit(1)).over(Window.partitionBy("l_returnflag", "l_quantity"))
         - 1
-    ).cast("long")
+    )
     y = (
-        2 * F.rank().over(wp)
+        2 * F.rank().over(wp).cast("long")
         + F.count(F.lit(1)).over(Window.partitionBy("l_returnflag", "l_extendedprice"))
         - 1
-    ).cast("long")
+    )
     ranked = li.select("l_returnflag", x.alias("x"), y.alias("y"))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — Σy² > int64
     m = ranked.groupBy("l_returnflag").agg(

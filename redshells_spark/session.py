@@ -9,6 +9,15 @@ partition coalescing) while remaining correct on ``local[N]``:
 - ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE
   coalescing makes a high value safe on a big cluster and a low value
   irrelevant locally.
+- Cached relations are sized by AQE too
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``, which
+  PySpark 4.1 leaves off): a ``.cache()`` keeps the partitions its bytes
+  need, not the raw ``spark.sql.shuffle.partitions`` layout, so every
+  scan of a small cached relation (each superstep of an iterative
+  operator re-reads its edge cache) runs a few tasks, not one per
+  shuffle partition. The cost is that a cached relation no longer
+  advertises its hash partitioning, so a join on its key may shuffle it
+  again.
 - Arrow enabled for pandas UDF / toPandas boundaries.
 """
 
@@ -22,6 +31,7 @@ _DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),

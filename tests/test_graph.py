@@ -140,3 +140,56 @@ def test_superstep_broadcast_and_shuffle_paths_agree(spark):
         for r in katz_walk_counts(e, max_broadcast_nodes=0).collect()
     }
     assert kz_b == kz_s
+
+
+def test_pin_count_is_one_job_and_exact(spark):
+    from redshells_spark.operators.graph import _pin_count
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test_pin_count", "pin_count")
+    try:
+        pinned, n = _pin_count(spark.range(37).filter("id % 3 != 0"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 24
+    assert len(sc.statusTracker().getJobIdsForGroup("test_pin_count")) == 1
+    assert pinned.count() == 24
+    assert _pin_count(spark.range(5).filter("id < 0"))[1] == 0
+
+
+@pytest.mark.parametrize(
+    "k, expected",
+    [
+        (0, {1: 0, 3: 0}),
+        (1, {1: 0, 3: 0, 2: 1, 4: 1}),
+        # saturates at hop 3: hop 4's frontier is empty
+        (4, {1: 0, 3: 0, 2: 1, 4: 1, 5: 2, 6: 3}),
+    ],
+)
+def test_k_hop_distances_on_a_path(spark, k, expected):
+    from redshells_spark.operators.graph import k_hop_distances
+
+    # directed path 1 -> 2 -> ... -> 6, BFS from {1, 3}
+    e = spark.createDataFrame([(i, i + 1) for i in range(1, 6)], "src long, dst long")
+    s = spark.createDataFrame([(1,), (3,)], "node long")
+    got = {r["node"]: r["dist"] for r in k_hop_distances(e, s, k=k).collect()}
+    assert got == expected
+
+
+def test_session_lets_aqe_size_cached_relations(spark):
+    # the session default lets AQE coalesce a cached aggregate: a tiny
+    # relation must not keep one partition per shuffle partition
+    from pyspark.sql import functions as F
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 8
+    agg = (
+        spark.range(1000, numPartitions=4)
+        .groupBy((F.col("id") % 5).alias("k"))
+        .count()
+        .cache()
+    )
+    try:
+        assert agg.count() == 5
+        assert agg.rdd.getNumPartitions() < 8
+    finally:
+        agg.unpersist()
