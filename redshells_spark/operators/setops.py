@@ -30,14 +30,3 @@ def set_difference_items(all_items: Column | str, group_items: Column | str) -> 
     g = F.col(group_items) if isinstance(group_items, str) else group_items
     return F.array_except(a, g)
 
-
-def set_union_ids(a: DataFrame, b: DataFrame) -> DataFrame:
-    """valid ids = existing ∪ additional (reference
-    ``contrib/model/gcmc_dataset.py:175-186``)."""
-    return a.union(b).distinct()
-
-
-def distinct_list(df: DataFrame) -> DataFrame:
-    """``list(set(data))`` (reference
-    ``calculate_similarity_with_matrix_factorization.py:44``)."""
-    return df.distinct()

@@ -22,6 +22,8 @@ Cross-engine determinism rules applied throughout:
 
 from __future__ import annotations
 
+import functools
+from collections import OrderedDict
 from collections.abc import Callable
 
 import numpy as np
@@ -96,201 +98,158 @@ KEYWORDS = ("spark", "join", "window", "stream", "hash")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Testdata physical types have changed across generations
-    # (TIMESTAMP(NANOS)-as-long vs timestamp[us]-as-NTZ); both confs are
-    # harmless when the current files don't need them. UTC pins the
-    # NTZ→TIMESTAMP reinterpretation so epoch math matches DuckDB's
-    # naive-as-UTC semantics even on a driver session with another tz.
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # noqa: BLE001 — conf may be locked; reads may still work
-            pass
+    # the nanosAsLong + UTC read confs this needs are session defaults
+    # (session.py), so a table read is a plain parquet scan
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_TOKEN_CACHE: dict[tuple[str, str], DataFrame] = {}
-_NDOCS_CACHE: dict[tuple[str, str], int] = {}
-_VOCAB_CACHE: dict[tuple[str, str], DataFrame] = {}
-_TOKEN_CACHE_MAX = 4  # bound the cache: evict + unpersist beyond this
+_SESSION_SCOPES = 4
+_scopes: OrderedDict[tuple[str, str], dict[Callable, object]] = OrderedDict()
 
 
+def session_cached(build):
+    """Memoise ``build(spark, sf_dir)`` per scope
+    ``(applicationId, sf_dir)``: data under ``sf_dir`` is immutable for
+    a session's lifetime, so a built relation stays valid until its
+    scope leaves. The ``_SESSION_SCOPES`` most recently used scopes are
+    kept; evicting one drops every builder's value for it together,
+    unpersisting the DataFrames newest first so Spark never re-plans a
+    dependent cache against an input that is about to go."""
+
+    @functools.wraps(build)
+    def cached(spark: SparkSession, sf_dir: str):
+        key = (spark.sparkContext.applicationId, sf_dir)
+        scope = _scopes.get(key)
+        if scope is None:
+            while len(_scopes) >= _SESSION_SCOPES:
+                _, old = _scopes.popitem(last=False)
+                for value in reversed(old.values()):
+                    if isinstance(value, DataFrame):
+                        value.unpersist()
+            scope = _scopes[key] = {}
+        else:
+            _scopes.move_to_end(key)
+        if build not in scope:
+            scope[build] = build(spark, sf_dir)
+        return scope[build]
+
+    return cached
+
+
+@session_cached
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenization feeds vocab + tf + shingles in the text queries —
-    # cache per (session, sf) so the scan+split runs once per query set
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TOKEN_CACHE:
-        while len(_TOKEN_CACHE) >= _TOKEN_CACHE_MAX:
-            old_key = next(iter(_TOKEN_CACHE))
-            _TOKEN_CACHE.pop(old_key).unpersist()
-            _NDOCS_CACHE.pop(old_key, None)
-            _VOCAB_CACHE.pop(old_key, None)
-        _TOKEN_CACHE[key] = tokenize_on_space(
-            _t(spark, sf_dir, "documents"), "text", "tokens", lowercase=True
-        ).cache()
-    return _TOKEN_CACHE[key]
+    # cached so the scan+split runs once per query set
+    return tokenize_on_space(
+        _t(spark, sf_dir, "documents"), "text", "tokens", lowercase=True
+    ).cache()
 
 
+@session_cached
 def _n_docs(spark: SparkSession, sf_dir: str) -> int:
-    # corpus size for idf — computed once per (session, sf) instead of
-    # an eager count() job inside every tfidf_scores call
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NDOCS_CACHE:
-        _NDOCS_CACHE[key] = _tokens(spark, sf_dir).count()
-    return _NDOCS_CACHE[key]
+    # corpus size for idf — computed once per scope instead of an eager
+    # count() job inside every tfidf_scores call
+    return _tokens(spark, sf_dir).count()
 
 
+@session_cached
 def _vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the trained dictionary is <= keep_n (100) rows but a 2-shuffle
     # plan — recomputing it inside every tfidf-family query was ~0.6s
     # of tfidf_top_tokens' 1.28s at sf0.1 (the r4 bench drift).
-    # Materialize once per (session, sf): identical rows, and every
+    # Materialize once per scope: identical rows, and every
     # downstream join sees a tiny local relation it can broadcast —
     # exactly how a production pipeline ships a trained vocab.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _VOCAB_CACHE:
-        full = train_dictionary(
-            _tokens(spark, sf_dir), "doc_id", "tokens", **DICT_PARAMS
-        )
-        # localCheckpoint keeps the materialized rows JVM-side (a
-        # collected-rows createDataFrame would re-enter via a pickled
-        # Python RDD — slower per use than the plan it replaced)
-        _VOCAB_CACHE[key] = full.coalesce(1).localCheckpoint(eager=True)
-    return _VOCAB_CACHE[key]
+    full = train_dictionary(_tokens(spark, sf_dir), "doc_id", "tokens", **DICT_PARAMS)
+    # localCheckpoint keeps the materialized rows JVM-side (a
+    # collected-rows createDataFrame would re-enter via a pickled
+    # Python RDD — slower per use than the plan it replaced)
+    return full.coalesce(1).localCheckpoint(eager=True)
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The default word-shingle relation (token-id bigrams,
     ``doc_shingles(_tokens, _vocab)``) shared across the dedup tier —
     ~10 queries re-derive these identical (doc_id, shingle) rows
     (posexplode + vocab join + window shuffle) before diverging into
-    signatures / verification / span statistics. Cached per
-    (session, sf) like ``_tokens``; shingle_len≠2 callers keep
-    building their own."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLE_CACHE:
-        while len(_SHINGLE_CACHE) >= _TOKEN_CACHE_MAX:
-            _SHINGLE_CACHE.pop(next(iter(_SHINGLE_CACHE))).unpersist()
-        _SHINGLE_CACHE[key] = doc_shingles(
-            _tokens(spark, sf_dir), _vocab(spark, sf_dir)
-        ).cache()
-    return _SHINGLE_CACHE[key]
+    signatures / verification / span statistics. shingle_len≠2
+    callers keep building their own."""
+    return doc_shingles(_tokens(spark, sf_dir), _vocab(spark, sf_dir)).cache()
 
 
-_WIDE16_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CAND44_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _wide16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``minhash_signatures_wide(_shingles, 16)`` (with sizes) —
-    cached per (session, sf). Rows are per-doc, and each signature
-    depends only on its own doc's shingles, so ANY doc-subset filter
-    of this relation is bit-identical to recomputing on the subset —
-    incremental/delta variants reuse it safely."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIDE16_CACHE:
-        while len(_WIDE16_CACHE) >= _TOKEN_CACHE_MAX:
-            _WIDE16_CACHE.pop(next(iter(_WIDE16_CACHE))).unpersist()
-        _WIDE16_CACHE[key] = minhash_signatures_wide(
-            _shingles(spark, sf_dir), num_hashes=16
-        ).cache()
-    return _WIDE16_CACHE[key]
+    """``minhash_signatures_wide(_shingles, 16)`` (with sizes). Rows
+    are per-doc, and each signature depends only on its own doc's
+    shingles, so ANY doc-subset filter of this relation is
+    bit-identical to recomputing on the subset — incremental/delta
+    variants reuse it safely."""
+    return minhash_signatures_wide(_shingles(spark, sf_dir), num_hashes=16).cache()
 
 
+@session_cached
 def _cand44(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``minhash_lsh_candidates_wide(_wide16, 4, 4)`` with the default
     1000 bucket cap — the canonical LSH candidate pair set shared by
     the near-dup tier. The long-form path yields the SAME pairs (both
     band keys are md5 of the j-ordered band minhashes), so long-form
     consumers reuse this cache too."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CAND44_CACHE:
-        while len(_CAND44_CACHE) >= _TOKEN_CACHE_MAX:
-            _CAND44_CACHE.pop(next(iter(_CAND44_CACHE))).unpersist()
-        _CAND44_CACHE[key] = minhash_lsh_candidates_wide(
-            _wide16(spark, sf_dir), bands=4, rows_per_band=4
-        ).cache()
-    return _CAND44_CACHE[key]
+    return minhash_lsh_candidates_wide(
+        _wide16(spark, sf_dir), bands=4, rows_per_band=4
+    ).cache()
 
 
-_SHARR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _sharr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc shingle ARRAY relation (doc_id, __arr, sz) derived from
     ``_shingles`` — the verification-side operand of every exact
     Jaccard check (one int ``array_intersect`` per candidate pair).
-    Cached per (session, sf): near-dedup, components, the corpus
-    pipeline, calibration, and method-agreement each re-ran the same
-    groupBy otherwise."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHARR_CACHE:
-        while len(_SHARR_CACHE) >= _TOKEN_CACHE_MAX:
-            _SHARR_CACHE.pop(next(iter(_SHARR_CACHE))).unpersist()
-        _SHARR_CACHE[key] = (
-            _shingles(spark, sf_dir)
-            .groupBy("doc_id")
-            .agg(
-                F.collect_list("shingle").alias("__arr"),
-                F.count(F.lit(1)).alias("sz"),
-            )
-            .cache()
+    Near-dedup, components, the corpus pipeline, calibration, and
+    method-agreement each re-ran the same groupBy otherwise."""
+    return (
+        _shingles(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(
+            F.collect_list("shingle").alias("__arr"),
+            F.count(F.lit(1)).alias("sz"),
         )
-    return _SHARR_CACHE[key]
+        .cache()
+    )
 
 
-_VPAIRS01_CACHE: dict[tuple[str, str], DataFrame] = {}
-_NDCOMP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _vpairs01(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical verified near-dup pair relation: LSH candidates
     (``_cand44``) exact-verified at Jaccard ≥ 0.1 — (doc_id_0,
     doc_id_1, jaccard). Shared by near-dedup, the component queries,
-    and the corpus pipeline; cached per (session, sf)."""
-    from redshells_spark.dedup.minhash import verify_jaccard as _vj
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _VPAIRS01_CACHE:
-        while len(_VPAIRS01_CACHE) >= _TOKEN_CACHE_MAX:
-            _VPAIRS01_CACHE.pop(next(iter(_VPAIRS01_CACHE))).unpersist()
-        _VPAIRS01_CACHE[key] = _vj(
-            _cand44(spark, sf_dir),
-            _shingles(spark, sf_dir),
-            threshold=0.1,
-            arrays=_sharr(spark, sf_dir),
-        ).cache()
-    return _VPAIRS01_CACHE[key]
+    and the corpus pipeline."""
+    return verify_jaccard(
+        _cand44(spark, sf_dir),
+        _shingles(spark, sf_dir),
+        threshold=0.1,
+        arrays=_sharr(spark, sf_dir),
+    ).cache()
 
 
+@session_cached
 def _nd_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over ``_vpairs01`` (hash-min + pointer
     doubling) — (doc_id, keep_id). The iterative superstep chain is
     the most expensive reusable artifact in the dedup tier, so it is
-    materialized once per (session, sf) via localCheckpoint (the CC
-    loop already truncates lineage per superstep)."""
+    materialized once per scope via localCheckpoint (the CC loop
+    already truncates lineage per superstep)."""
     from redshells_spark.dedup.minhash import connected_components_dedup
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NDCOMP_CACHE:
-        while len(_NDCOMP_CACHE) >= _TOKEN_CACHE_MAX:
-            _NDCOMP_CACHE.pop(next(iter(_NDCOMP_CACHE)))
-        _NDCOMP_CACHE[key] = connected_components_dedup(
-            _vpairs01(spark, sf_dir).select("doc_id_0", "doc_id_1")
-        ).localCheckpoint(eager=True)
-    return _NDCOMP_CACHE[key]
+    return connected_components_dedup(
+        _vpairs01(spark, sf_dir).select("doc_id_0", "doc_id_1")
+    ).localCheckpoint(eager=True)
 
 
-_DAILYPC_CACHE: dict[tuple[str, str], DataFrame] = {}
 _DAY_US_CONST = 86_400_000_000
 
 
+@session_cached
 def _daily_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(t, v): the dense daily purchase-count series — one row per day
     present in events (any type), v = exact count of 'purchase' events
@@ -299,77 +258,54 @@ def _daily_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     periodogram, Gumbel maxima, Cox-Stuart, MASE, Holt, ...) derive
     this identical relation; each used to pay two events scans plus a
     distinct-days⋈counts join. One conditional groupBy (purchase-free
-    days fold into the same aggregate) cached per (session, sf)."""
-    from redshells_spark.timeutil import event_us as _eus
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DAILYPC_CACHE:
-        while len(_DAILYPC_CACHE) >= _TOKEN_CACHE_MAX:
-            _DAILYPC_CACHE.pop(next(iter(_DAILYPC_CACHE))).unpersist()
-        ev = _t(spark, sf_dir, "events")
-        _DAILYPC_CACHE[key] = (
-            ev.select("event_type", _eus(ev, "ts").alias("us"))
-            .select(
-                "event_type",
-                F.expr(f"us div {_DAY_US_CONST}").cast("long").alias("t"),
-            )
-            .groupBy("t")
-            .agg(
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                )
-                .cast("long")
-                .alias("v")
-            )
-            .cache()
+    days fold into the same aggregate), cached."""
+    ev = _t(spark, sf_dir, "events")
+    return (
+        ev.select("event_type", event_us(ev, "ts").alias("us"))
+        .select(
+            "event_type",
+            F.expr(f"us div {_DAY_US_CONST}").cast("long").alias("t"),
         )
-    return _DAILYPC_CACHE[key]
+        .groupBy("t")
+        .agg(
+            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+            .cast("long")
+            .alias("v")
+        )
+        .cache()
+    )
 
 
-_KNLM_CACHE: dict[tuple[str, str], object] = {}
-
-
+@session_cached
 def _kn_lm(spark: SparkSession, sf_dir: str):
     """The interpolated Kneser-Ney bigram LM over `documents`, trained
-    once per (session, sf) — kn_perplexity, ccnet_perplexity_buckets
-    and min_k_prob_contamination score against the identical model, so
+    once per scope — kn_perplexity, ccnet_perplexity_buckets and
+    min_k_prob_contamination score against the identical model, so
     each used to pay its own corpus explode + three groupBys."""
     from redshells_spark.text.ngram_lm import train_kn_bigram_lm
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KNLM_CACHE:
-        while len(_KNLM_CACHE) >= _TOKEN_CACHE_MAX:
-            _KNLM_CACHE.pop(next(iter(_KNLM_CACHE)))
-        _KNLM_CACHE[key] = train_kn_bigram_lm(_t(spark, sf_dir, "documents"))
-    return _KNLM_CACHE[key]
+    return train_kn_bigram_lm(_t(spark, sf_dir, "documents"))
 
 
-_GRAM_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-sorted word-bigram prefix-filter index, blocked by
     document source (``build_rank_sorted_sets(grams, doc_id, gram,
     source)``) — threshold-FREE, so ``ngram_jaccard`` (τ=0.1) and
     ``dedup_method_agreement`` (τ=0.5) share ONE materialization of
-    the gram explode + frequency rank + per-doc sort. Cached per
-    (session, sf); MEMORY_AND_DISK spills rather than OOMs at 100×."""
+    the gram explode + frequency rank + per-doc sort.
+    MEMORY_AND_DISK spills rather than OOMs at 100×."""
     from pyspark.storagelevel import StorageLevel
 
     from redshells_spark.dedup.ngram import word_ngrams
     from redshells_spark.dedup.ppjoin import build_rank_sorted_sets
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GRAM_INDEX_CACHE:
-        while len(_GRAM_INDEX_CACHE) >= _TOKEN_CACHE_MAX:
-            _GRAM_INDEX_CACHE.pop(next(iter(_GRAM_INDEX_CACHE))).unpersist()
-        grams = _tokens(spark, sf_dir).select(
-            "doc_id", "source", F.explode(word_ngrams("tokens", 2)).alias("gram")
-        )
-        _GRAM_INDEX_CACHE[key] = build_rank_sorted_sets(
-            grams, "doc_id", "gram", block_column="source"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    return _GRAM_INDEX_CACHE[key]
+    grams = _tokens(spark, sf_dir).select(
+        "doc_id", "source", F.explode(word_ngrams("tokens", 2)).alias("gram")
+    )
+    return build_rank_sorted_sets(
+        grams, "doc_id", "gram", block_column="source"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _r4(c, name: str):

@@ -6,7 +6,10 @@ __init__ import order and pinned by tests/test_ann_recall.py.
 """
 
 from redshells_spark.queries._shared import *  # noqa: F401,F403
-from redshells_spark.queries.text import _copurchase_edges, _duck_h60  # noqa: F401,E402
+from redshells_spark.queries.text import (  # noqa: F401,E402
+    _copurchase_edges_weighted,
+    _duck_h60,
+)
 
 # ------------------------------------------------- product analytics tier
 
@@ -482,7 +485,7 @@ def _k_hop_reachability(spark, sf_dir):
         .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
         .select(F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("node"))
     )
-    return k_hop_distances(_copurchase_edges(spark, sf_dir), sources, k=3)
+    return k_hop_distances(_copurchase_edges_weighted(spark, sf_dir), sources, k=3)
 
 
 @q(

@@ -195,9 +195,8 @@ def _bpe_cte(k: int, min_count: int = 2) -> str:
 
 _BPE_K = 8
 
-_BPE_CACHE: dict[tuple[str, str], tuple] = {}
 
-
+@session_cached
 def _bpe_trained(spark: SparkSession, sf_dir: str):
     """(merges_df, segmented_words) for the documents corpus, cached
     per (session, sf) — bpe_merge_table and bpe_subtoken_counts share
@@ -205,13 +204,7 @@ def _bpe_trained(spark: SparkSession, sf_dir: str):
     table once and apply it everywhere."""
     from redshells_spark.text.bpe import learn_bpe_merges, word_freq_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_CACHE:
-        while len(_BPE_CACHE) >= _TOKEN_CACHE_MAX:
-            _BPE_CACHE.pop(next(iter(_BPE_CACHE)))
-        wf = word_freq_table(_t(spark, sf_dir, "documents"))
-        _BPE_CACHE[key] = learn_bpe_merges(wf, _BPE_K)
-    return _BPE_CACHE[key]
+    return learn_bpe_merges(word_freq_table(_t(spark, sf_dir, "documents")), _BPE_K)
 
 
 @q(

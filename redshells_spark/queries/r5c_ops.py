@@ -60,34 +60,24 @@ _COMPONENTS_SQL = f"""{_SHINGLE_SQL},
 """
 
 
-_NEAR_DUP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _near_dup_labeled(spark, sf_dir):
     """Full corpus labeled with near-dup components: the SAME pipeline
     near_dup_components value-matches, extended to singletons.
 
-    Cached per (session, sf) like the vocab and the k-NN graph: the
-    component labeling is the shared dedup index that canonical-pick,
-    leakage-safe-split, and the cluster histogram all consume — a
-    production pipeline labels once and derives every report from it
-    (three bench queries each re-ran the ~7s chain before this)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _NEAR_DUP_CACHE:
-        return _NEAR_DUP_CACHE[key]
+    Cached like the vocab and the k-NN graph: the component labeling
+    is the shared dedup index that canonical-pick, leakage-safe-split,
+    and the cluster histogram all consume — a production pipeline
+    labels once and derives every report from it (three bench queries
+    each re-ran the ~7s chain before this)."""
     from redshells_spark.dedup.canonical import attach_components
 
-    toks = _tokens(spark, sf_dir)
-    comps = _nd_components(spark, sf_dir)
-    docs = toks.select(
+    docs = _tokens(spark, sf_dir).select(
         "doc_id", F.size("tokens").cast("long").alias("n_tokens")
     )
-    while len(_NEAR_DUP_CACHE) >= 2:
-        _NEAR_DUP_CACHE.pop(next(iter(_NEAR_DUP_CACHE)))
-    _NEAR_DUP_CACHE[key] = attach_components(
-        docs, comps, "doc_id", "keep_id"
+    return attach_components(
+        docs, _nd_components(spark, sf_dir), "doc_id", "keep_id"
     ).localCheckpoint(eager=True)
-    return _NEAR_DUP_CACHE[key]
 
 
 @q(
@@ -236,31 +226,22 @@ def _graph_search_oracle() -> str:
     )
 
 
-_KNN_GRAPH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _knn_graph(spark, sf_dir) -> DataFrame:
     # the built k-NN graph is the shared ANN index: the build query and
     # the search query both consume it, exactly as a production system
     # builds the index once and serves from it. Cached IN-SESSION only
-    # (dict below, like _shared._VOCAB_CACHE): every fresh session
+    # (session_cached, like _shared._vocab): every fresh session
     # recomputes the NN-descent build from the parquet inputs — no
     # cross-run disk target, so a bench/oracle invocation never reads a
     # precomputed index. (task.py's param-hash targets remain the
     # pipeline feature — tests/test_knn_graph.py::test_graph_task_parity
     # — but query paths do not use them.) The NN-descent rounds already
     # localCheckpoint per round, so the cached plan is shallow.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KNN_GRAPH_CACHE:
-        while len(_KNN_GRAPH_CACHE) >= 2:
-            _KNN_GRAPH_CACHE.pop(next(iter(_KNN_GRAPH_CACHE))).unpersist()
-        from redshells_spark.similarity.knn_graph import knn_graph_nn_descent
+    from redshells_spark.similarity.knn_graph import knn_graph_nn_descent
 
-        emb = _t(spark, sf_dir, "embeddings")
-        _KNN_GRAPH_CACHE[key] = knn_graph_nn_descent(
-            emb, k=10, iterations=3, seed=7
-        ).cache()
-    return _KNN_GRAPH_CACHE[key]
+    emb = _t(spark, sf_dir, "embeddings")
+    return knn_graph_nn_descent(emb, k=10, iterations=3, seed=7).cache()
 
 
 @q("knn_graph_nn_descent", _knn_graph_oracle())

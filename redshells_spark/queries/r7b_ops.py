@@ -668,9 +668,7 @@ def _containment_dedup_join(spark, sf_dir):
     return _containment_pairs(spark, sf_dir)
 
 
-_CONTAIN_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
+@session_cached
 def _containment_pairs(spark, sf_dir):
     """The verified UNFLOORED τ=0.8 containment relation over the
     shared rank-sorted shingle index, cached per (session, sf): the
@@ -685,17 +683,12 @@ def _containment_pairs(spark, sf_dir):
     from redshells_spark.dedup.ppjoin import containment_pairs_from_rank_sorted
     from redshells_spark.queries.r6c_ops import _ppjoin_index, _ppjoin_universe
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CONTAIN_CACHE:
-        while len(_CONTAIN_CACHE) >= 2:
-            _CONTAIN_CACHE.pop(next(iter(_CONTAIN_CACHE))).unpersist()
-        _CONTAIN_CACHE[key] = containment_pairs_from_rank_sorted(
-            _ppjoin_index(spark, sf_dir),
-            8,
-            10,
-            element_universe=_ppjoin_universe(spark, sf_dir),
-        ).cache()
-    return _CONTAIN_CACHE[key]
+    return containment_pairs_from_rank_sorted(
+        _ppjoin_index(spark, sf_dir),
+        8,
+        10,
+        element_universe=_ppjoin_universe(spark, sf_dir),
+    ).cache()
 
 
 # ------------------------------------------------- EB shrinkage

@@ -474,9 +474,9 @@ def _label_propagation_communities(spark, sf_dir):
     the fixpoint engine-independent. operators/graph.py:
     min_label_propagation."""
     from redshells_spark.operators.graph import min_label_propagation
-    from redshells_spark.queries.text import _copurchase_edges
+    from redshells_spark.queries.text import _copurchase_edges_weighted
 
-    lab = min_label_propagation(_copurchase_edges(spark, sf_dir), rounds=2)
+    lab = min_label_propagation(_copurchase_edges_weighted(spark, sf_dir), rounds=2)
     return (
         lab.groupBy(F.col("lab").alias("community"))
         .agg(F.count(F.lit(1)).cast("long").alias("size"))
@@ -511,9 +511,9 @@ def _katz_centrality_paths(spark, sf_dir):
     Shares the cached copurchase edge relation. operators/graph.py:
     katz_walk_counts."""
     from redshells_spark.operators.graph import katz_walk_counts
-    from redshells_spark.queries.text import _copurchase_edges
+    from redshells_spark.queries.text import _copurchase_edges_weighted
 
-    k = katz_walk_counts(_copurchase_edges(spark, sf_dir))
+    k = katz_walk_counts(_copurchase_edges_weighted(spark, sf_dir))
     return k.orderBy(F.col("katz_x64").desc(), F.col("node").asc()).limit(20)
 
 

@@ -62,30 +62,18 @@ def _norm_buckets(spark, sf_dir):
     )
 
 
-_CT_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
+@session_cached
 def _contingency(spark, sf_dir):
     # level-table bounded (|labels| x 8 octiles) but consumed by 3-4
     # branches in EACH of ari/nmi — without the pin every margin and
     # total re-ran the corpus norm fold (18 embeddings scans at the
-    # round-8 plan audit). Cached per (session, sf): ari and nmi share
-    # one build.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CT_CACHE:
-        # bound like _TOKEN_CACHE: drop entries for other sessions/SFs
-        # so stale JVM-backed references don't accumulate in long-lived
-        # processes (data under sf_dir is immutable per session — the
-        # repo-wide cache contract)
-        while len(_CT_CACHE) >= 4:
-            _CT_CACHE.pop(next(iter(_CT_CACHE)))
-        pts = _norm_buckets(spark, sf_dir)
-        _CT_CACHE[key] = (
-            pts.groupBy("a", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("nij"))
-            .localCheckpoint(eager=True)
-        )
-    return _CT_CACHE[key]
+    # round-8 plan audit). Cached: ari and nmi share one build.
+    return (
+        _norm_buckets(spark, sf_dir)
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("nij"))
+        .localCheckpoint(eager=True)
+    )
 
 
 # --------------------------------------------- adjusted Rand index

@@ -24,10 +24,8 @@ _DAY_US = 86_400_000_000
 # ----------------------------------------------------------------
 # shared part co-purchase graph (same construction as triangle_counts:
 # parts bought with quantity >= 45 in the same order, id-canonical
-# pairs) — cached per (session, sf) like text._copurchase_edges so the
-# three graph queries below build it once.
-
-_PART_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
+# pairs) — session_cached like text._copurchase_edges_weighted, so
+# the three graph queries below build it once.
 
 _PART_EDGES_SQL = """li AS (SELECT l_orderkey, l_partkey FROM lineitem
              WHERE l_quantity >= 45),
@@ -40,50 +38,38 @@ _PART_EDGES_SQL = """li AS (SELECT l_orderkey, l_partkey FROM lineitem
                FROM und GROUP BY 1)"""
 
 
+@session_cached
 def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (a < b) distinct part co-purchase edges, cached."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PART_EDGE_CACHE:
-        while len(_PART_EDGE_CACHE) >= 4:
-            _PART_EDGE_CACHE.pop(next(iter(_PART_EDGE_CACHE))).unpersist()
-        li = (
-            _t(spark, sf_dir, "lineitem")
-            .filter(F.col("l_quantity") >= 45)
-            .select("l_orderkey", "l_partkey")
-        )
-        a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("a"))
-        b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("b"))
-        e = (
-            a.join(b, "k")
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-        _PART_EDGE_CACHE[key] = e.cache()
-    return _PART_EDGE_CACHE[key]
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_quantity") >= 45)
+        .select("l_orderkey", "l_partkey")
+    )
+    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("a"))
+    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("b"))
+    e = a.join(b, "k").filter(F.col("a") < F.col("b")).select("a", "b").distinct()
+    return e.cache()
 
 
-_PART_DEG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _und_deg(spark, sf_dir):
+def _und(spark, sf_dir):
     e = _part_edges(spark, sf_dir)
-    und = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
+    return e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
+
+
+@session_cached
+def _part_deg(spark, sf_dir):
     # the degree relation is tiny (one row per part) but each lazy
     # reference re-shuffles the symmetrized edge union; assortativity
-    # alone references it three times — cache it per (session, sf)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PART_DEG_CACHE:
-        while len(_PART_DEG_CACHE) >= 4:
-            _PART_DEG_CACHE.pop(next(iter(_PART_DEG_CACHE))).unpersist()
-        _PART_DEG_CACHE[key] = (
-            und.groupBy(F.col("src").alias("node"))
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-            .cache()
-        )
-    return und, _PART_DEG_CACHE[key]
+    # alone references it three times — cache it
+    return (
+        _und(spark, sf_dir)
+        .groupBy(F.col("src").alias("node"))
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+        .cache()
+    )
 
 
 # ------------------------------------------ local clustering coefficient
@@ -127,7 +113,7 @@ def _local_clustering_coefficient(spark, sf_dir):
     from redshells_spark.operators.graph import count_triangles_per_node
 
     e = _part_edges(spark, sf_dir)
-    _, deg = _und_deg(spark, sf_dir)
+    deg = _part_deg(spark, sf_dir)
     tn = count_triangles_per_node(
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     ).select(F.col("node"), F.col("n_triangles").alias("n_tri"))
@@ -199,7 +185,7 @@ def _degree_assortativity(spark, sf_dir):
     ratio is a single fixed IEEE tree (products taken in double —
     m*sxy exceeds int64 at 10x). Disassortative r < 0 is the expected
     co-purchase signature (hubs link to leaves)."""
-    und, deg = _und_deg(spark, sf_dir)
+    und, deg = _und(spark, sf_dir), _part_deg(spark, sf_dir)
     j = (
         und.join(
             deg.select(F.col("node").alias("src"), F.col("deg").alias("da")), "src"
@@ -272,7 +258,7 @@ def _link_prediction_scores(spark, sf_dir):
     At 10^9 lines everything downstream of the first groupBy is
     bounded by the part dimension and sum(deg^2), not the fact table."""
     e = _part_edges(spark, sf_dir)
-    und, deg = _und_deg(spark, sf_dir)
+    und, deg = _und(spark, sf_dir), _part_deg(spark, sf_dir)
     ctr = deg.filter(F.col("deg") >= 2).select(
         F.col("node"),
         F.floor(F.lit(1000000000.0) / F.log(F.col("deg").cast("double")) + F.lit(0.5))

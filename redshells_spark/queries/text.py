@@ -527,75 +527,54 @@ def _pagerank_oracle_sql(iterations: int = 3) -> str:
        SELECT node, r AS rank FROM {prev}"""
 
 
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetrized customer–supplier purchase graph, cached per
-    (session, sf): pagerank and the bounded BFS consume the identical
-    relation, and the build (fact join + two shuffling dedups over
-    ~1M string pairs) costs more than either algorithm's supersteps —
-    one ``cache()`` makes the second graph query start from RAM. The
-    pre-symmetrize dedup is skipped on purpose: ``symmetrize_edges``
-    dedups the union anyway, so deduping e0 first only adds a
-    shuffle."""
+    """Symmetrized customer–supplier purchase graph (src, dst): a
+    projection of the cached ``_copurchase_edges_weighted``. The graph
+    operators that pin their edge input (``_materialize_edges``) take
+    the cached relation itself instead, so they skip that pin."""
     return _copurchase_edges_weighted(spark, sf_dir).select("src", "dst")
 
 
+@session_cached
 def _copurchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(src, dst, cnt): the cached relation itself — symmetrized edges
-    WITH the per-pair purchase count, so the whole graph tier (pagerank,
-    BFS, LPA, Katz, AND the weighted Bellman-Ford) shares ONE
-    materialization of the fact join. The count aggregate replaces the
-    former symmetrize-then-dropDuplicates (one shuffle, not two): the
-    groupBy yields distinct directed (c→s) pairs and the mirror's
-    prefixes are disjoint from them, so the union is distinct by
-    construction — bit-identical edge set to symmetrize_edges(e0)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_CACHE:
-        while len(_EDGE_CACHE) >= _TOKEN_CACHE_MAX:
-            _EDGE_CACHE.pop(next(iter(_EDGE_CACHE))).unpersist()
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        e0 = (
-            li.join(o, li["l_orderkey"] == o["o_orderkey"])
-            .groupBy(
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    """(src, dst, cnt): symmetrized edges WITH the per-pair purchase
+    count, cached, so the whole graph tier (pagerank, BFS, LPA, Katz,
+    AND the weighted Bellman-Ford) shares ONE materialization of the
+    fact join — it costs more than any algorithm's supersteps. The
+    count aggregate replaces the former symmetrize-then-dropDuplicates
+    (one shuffle, not two): the groupBy yields distinct directed (c→s)
+    pairs and the mirror's prefixes are disjoint from them, so the
+    union is distinct by construction — bit-identical edge set to
+    symmetrize_edges(e0)."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    e0 = (
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .groupBy(
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
         )
-        sym = e0.unionByName(
-            e0.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                F.col("cnt"),
-            )
-        )
-        _EDGE_CACHE[key] = sym.cache()
-    return _EDGE_CACHE[key]
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+    sym = e0.unionByName(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("cnt"))
+    )
+    return sym.cache()
 
 
-_EDGE_DEG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _copurchase_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, deg): outgoing-arc count per node of the symmetrized
     co-purchase graph — the degree relation rich_club_coefficient and
-    graph_modularity both derive; cached per (session, sf) so the
-    groupBy over the ~1M-arc cached edge list runs once instead of
-    once per lazy reference (assortativity-style queries read it 3x)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_DEG_CACHE:
-        while len(_EDGE_DEG_CACHE) >= _TOKEN_CACHE_MAX:
-            _EDGE_DEG_CACHE.pop(next(iter(_EDGE_DEG_CACHE))).unpersist()
-        _EDGE_DEG_CACHE[key] = (
-            _copurchase_edges(spark, sf_dir)
-            .groupBy("src")
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-            .cache()
-        )
-    return _EDGE_DEG_CACHE[key]
+    graph_modularity both derive; cached so the groupBy over the
+    ~1M-arc cached edge list runs once instead of once per lazy
+    reference (assortativity-style queries read it 3x)."""
+    return (
+        _copurchase_edges(spark, sf_dir)
+        .groupBy("src")
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+        .cache()
+    )
 
 
 @q("pagerank_copurchase", _pagerank_oracle_sql(3))
@@ -608,7 +587,7 @@ def _pagerank_copurchase(spark, sf_dir):
     from redshells_spark.operators.graph import pagerank
 
     return pagerank(
-        _copurchase_edges(spark, sf_dir),
+        _copurchase_edges_weighted(spark, sf_dir),
         iterations=3,
         damping=0.85,
         round_digits=10,

@@ -200,16 +200,6 @@ class StreamingCms:
         return cms_lookup(state, keys, self.key_column, self.depth, self.width)
 
 
-def run_streaming_cms(stream: DataFrame, cms: StreamingCms, query_name: str):
-    return (
-        stream.writeStream.foreachBatch(cms.process_batch)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 @dataclass
 class StreamingHll:
     """foreachBatch processor maintaining portable HyperLogLog
@@ -247,16 +237,6 @@ class StreamingHll:
         g = self.group_column
         state = _read_or_empty(spark, self._path(), f"{g} string, reg long, m_j long")
         return hll_estimate(state, [g], p=self.p)
-
-
-def run_streaming_hll(stream: DataFrame, hll: StreamingHll, query_name: str):
-    return (
-        stream.writeStream.foreachBatch(hll.process_batch)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 @dataclass
@@ -309,16 +289,6 @@ class StreamingPsi:
             spark, self._path(), f"{g} string, bucket long, c1 long, c2 long"
         )
         return psi_from_bucket_counts(state, [g])
-
-
-def run_streaming_psi(stream: DataFrame, psi: StreamingPsi, query_name: str):
-    return (
-        stream.writeStream.foreachBatch(psi.process_batch)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 @dataclass

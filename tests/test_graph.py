@@ -193,3 +193,26 @@ def test_session_lets_aqe_size_cached_relations(spark):
         assert agg.rdd.getNumPartitions() < 8
     finally:
         agg.unpersist()
+
+
+def test_materialize_edges_passes_a_cached_relation_through(spark):
+    # the graph operators pin an uncached edge plan, but a cached
+    # relation is already materialized: no job, just the (src, dst)
+    # projection
+    from redshells_spark.operators.graph import _materialize_edges
+
+    sc = spark.sparkContext
+    e = spark.createDataFrame(
+        [(1, 2, 5), (2, 1, 5)], "src long, dst long, cnt long"
+    ).cache()
+    try:
+        e.count()
+        sc.setJobGroup("test_materialize_edges", "materialize_edges")
+        try:
+            out = _materialize_edges(e)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("test_materialize_edges") == []
+        assert out.columns == ["src", "dst"]
+    finally:
+        e.unpersist()
