@@ -98,8 +98,19 @@ KEYWORDS = ("spark", "join", "window", "stream", "hash")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # the nanosAsLong + UTC read confs this needs are session defaults
-    # (session.py), so a table read is a plain parquet scan
+    # Testdata physical types have changed across generations
+    # (TIMESTAMP(NANOS)-as-long vs timestamp[us]-as-NTZ); both confs are
+    # harmless when the current files don't need them. UTC pins the
+    # NTZ→TIMESTAMP reinterpretation so epoch math matches DuckDB's
+    # naive-as-UTC semantics even on a driver session with another tz.
+    for k, v in (
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        ("spark.sql.session.timeZone", "UTC"),
+    ):
+        try:
+            spark.conf.set(k, v)
+        except Exception:  # noqa: BLE001 — conf may be locked; reads may still work
+            pass
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

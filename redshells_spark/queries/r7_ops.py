@@ -633,9 +633,12 @@ def _graph_modularity(spark, sf_dir):
     '__total__' row). Degree groupBy + two community joins — no window
     ever touches the edge list. operators/graph.py:partition_modularity."""
     from redshells_spark.operators.graph import partition_modularity
-    from redshells_spark.queries.text import _copurchase_deg, _copurchase_edges
+    from redshells_spark.queries.text import (
+        _copurchase_deg,
+        _copurchase_edges_weighted,
+    )
 
-    edges = _copurchase_edges(spark, sf_dir)
+    edges = _copurchase_edges_weighted(spark, sf_dir)
     cust = _t(spark, sf_dir, "customer")
     supp = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")

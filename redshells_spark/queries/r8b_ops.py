@@ -318,10 +318,10 @@ def _k_core_peel_rounds(spark, sf_dir):
     core converges at round 1 and 5 of 6 joins vanish. Worst case (a
     fresh peel every round) stays the full 6-join budget; at 100x the
     per-round cost is one fact-shaped join."""
-    from redshells_spark.queries.text import _copurchase_edges
+    from redshells_spark.queries.text import _copurchase_edges_weighted
 
     return _k_core_rounds_table(
-        spark, _copurchase_edges(spark, sf_dir), k=8, rounds=6
+        spark, _copurchase_edges_weighted(spark, sf_dir), k=8, rounds=6
     )
 
 
@@ -359,9 +359,12 @@ def _rich_club_coefficient(spark, sf_dir):
     integer E2·1e6 div (N·(N−1)) — no float anywhere. One degree
     groupBy + one edge-degree join on the shared cached co-purchase
     relation; the k-ladder is a 5-row broadcast."""
-    from redshells_spark.queries.text import _copurchase_deg, _copurchase_edges
+    from redshells_spark.queries.text import (
+        _copurchase_deg,
+        _copurchase_edges_weighted,
+    )
 
-    edges = _copurchase_edges(spark, sf_dir)
+    edges = _copurchase_edges_weighted(spark, sf_dir)
     # shared cached degree relation (same groupBy graph_modularity
     # uses) — referenced three times below, built once per session/sf
     deg = _copurchase_deg(spark, sf_dir).select(

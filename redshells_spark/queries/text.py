@@ -527,14 +527,6 @@ def _pagerank_oracle_sql(iterations: int = 3) -> str:
        SELECT node, r AS rank FROM {prev}"""
 
 
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetrized customer–supplier purchase graph (src, dst): a
-    projection of the cached ``_copurchase_edges_weighted``. The graph
-    operators that pin their edge input (``_materialize_edges``) take
-    the cached relation itself instead, so they skip that pin."""
-    return _copurchase_edges_weighted(spark, sf_dir).select("src", "dst")
-
-
 @session_cached
 def _copurchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, cnt): symmetrized edges WITH the per-pair purchase
@@ -570,7 +562,7 @@ def _copurchase_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1M-arc cached edge list runs once instead of once per lazy
     reference (assortativity-style queries read it 3x)."""
     return (
-        _copurchase_edges(spark, sf_dir)
+        _copurchase_edges_weighted(spark, sf_dir)
         .groupBy("src")
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
         .cache()

@@ -99,7 +99,8 @@ def test_int_and_tuple_values_are_cached_and_evicted(spark, scopes, tmp_path):
 
 
 def test_session_defaults_cover_table_reads(spark):
-    # _shared._t is a plain parquet read: the nanos-as-long and UTC
-    # confs it needs must come from get_spark_session
+    # get_spark_session sets the nanos-as-long and UTC read confs up
+    # front; _shared._t sets them again for sessions built elsewhere
+    # (tests/test_timeutil.py covers that case)
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"

@@ -111,3 +111,75 @@ def test_event_range_filter_identical_across_dtypes(spark):
     assert df.filter(event_range_filter(df, "ts", lo_us=hi)).count() == sum(
         1 for _, us, *_ in _BASE if us >= hi
     )
+
+
+def _restoring(spark, confs):
+    """Set ``confs`` on the shared session; return a callable that puts
+    the previous values back (the session's defaults are UTC +
+    nanos-as-long, which the other tests rely on)."""
+    before = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+
+    def restore():
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    return restore
+
+
+def test_table_reads_match_the_oracle_on_a_non_utc_session(spark, sf_dir):
+    """The driver runs the registry on its own session, not one from
+    get_spark_session, so its time zone need not be UTC. Table reads
+    (queries._shared._t) must still give DuckDB's naive-as-UTC event
+    times: an hour-of-day query matches its oracle under another zone."""
+    import duckdb
+
+    from redshells_spark.queries import get_oracles, get_queries
+
+    name = "seasonal_baseline_forecast"
+    restore = _restoring(spark, {"spark.sql.session.timeZone": "America/Los_Angeles"})
+    try:
+        df = get_queries()[name](spark, sf_dir)
+        got = sorted(tuple(r[c] for c in sorted(df.columns)) for r in df.collect())
+    finally:
+        restore()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+    cur = con.execute(get_oracles()[name])
+    cols = [d[0] for d in cur.description]
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    want = sorted(tuple(r[i] for i in order) for r in cur.fetchall())
+    assert got == want
+    assert len(got) > 0
+
+
+def test_table_reads_accept_timestamp_nanos(spark, tmp_path):
+    """Earlier testdata stored event times as parquet TIMESTAMP(NANOS),
+    which Spark reads only under the legacy nanos-as-long conf. A table
+    read must set it itself, so such files load on any session."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from redshells_spark.queries._shared import _t
+
+    nanos = pa.array([us * 1000 for _, us, *_ in _BASE], pa.timestamp("ns"))
+    ids = pa.array([e for e, *_ in _BASE], pa.int64())
+    pq.write_table(
+        pa.table({"event_id": ids, "ts": nanos}),
+        str(tmp_path / "events.parquet"),
+        version="2.6",
+    )
+    restore = _restoring(spark, {"spark.sql.legacy.parquet.nanosAsLong": "false"})
+    try:
+        ev = _t(spark, str(tmp_path), "events")
+        got = {
+            r["event_id"]: r["us"]
+            for r in ev.select("event_id", event_us(ev, "ts").alias("us")).collect()
+        }
+    finally:
+        restore()
+    assert got == {e: us for e, us, *_ in _BASE}
